@@ -32,11 +32,18 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // a query must leave java.io.tmpdir as it found it, once its result
+      // is written; JVM-lifetime caches are not leaks (TempDirs.entries)
+      val before = graft.runtime.TempDirs.entries()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      val leaked = graft.runtime.TempDirs.entries() -- before
+      if (leaked.nonEmpty)
+        System.err.println(
+          s"[verify] tmp-leak $name: ${leaked.toSeq.sorted.mkString(" ")}")
     }
     spark.stop()
     // Explicit success: a lingering non-daemon thread or a native-lib

@@ -4,12 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Principal component analysis over an embedding column, built the way
-  * it scales to 100 TB: the ONLY distributed pass is a d×d Gram-matrix
-  * aggregation (map-side combinable sums — shuffle volume is
+  * it scales to 100 TB: the distributed work is a d×d Gram-matrix
+  * aggregation (map-side combinable sums — the aggregation shuffle is
   * partitions × d rows regardless of corpus size), the O(d³)
   * eigensolve runs driver-side on the d×d result (d = 64 here; bounded
   * by the embedding width, never the corpus), and the projection is a
-  * scan-side broadcast dot product.
+  * scan-side broadcast dot product. The Gram pass is NOT the only
+  * exchange: [[gramMicro]] first repartitions its input to
+  * `defaultParallelism`, a round-robin shuffle of the full vector
+  * bytes, so a one-file input does not run the outer products as a
+  * single task. At corpus scale that spread costs a corpus-bytes
+  * exchange the input's own splits would not need.
   *
   * The Gram pass is micro-quantized integer arithmetic
   * (q_i = round(x_i·1e6), the q54/q74 convention), so the matrix the

@@ -360,9 +360,13 @@ object Quantization {
     * q_i = round(x_i · 1e6) (micro-quantized, the q54 convention) and
     * sign(j, i) = 1 − 2·(xxhash64(j, i) & 1). The "matrix" is never
     * materialized — each sign is re-derived from the hash on both use
-    * and replay, so the projection is a pure scan-side codegen'd
-    * expression: no shuffle, no UDF, no broadcast, and bit-exact in any
-    * engine with the same hash (the q74 oracle).
+    * and replay, so each projection is a codegen'd expression: no UDF,
+    * no broadcast, and bit-exact in any engine with the same hash (the
+    * q74 oracle). It is not shuffle-free: the input is first
+    * repartitioned to `defaultParallelism` (a round-robin exchange of
+    * the full vector bytes) so a one-file input does not run the sign
+    * chains as a single task; at corpus scale that is a corpus-bytes
+    * exchange the input's own splits would not need.
     *
     * Why it matters at 100 TB: clustering / dedup / ANN prefilters on
     * the 8-dim projection touch 8× fewer bytes than the 64-dim corpus,

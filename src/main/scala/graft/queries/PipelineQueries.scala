@@ -4789,7 +4789,7 @@ object PipelineQueries {
 
     def dir(s: SparkSession, sfDir: String): String =
       cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("warc_fixture").toString
+        val out = graft.runtime.TempDirs.cacheDir("warc_fixture").toString
         val rows = docs(s, sfDir)
           .select(col("doc_id"), col("text"), messyUrlCol.as("url"))
           .repartition(8, pmod(col("doc_id"), lit(8L)))
@@ -5241,7 +5241,7 @@ object PipelineQueries {
         lit(".example.com/d/"), col("doc_id").cast("string"))
     def dir(s: SparkSession, sfDir: String): String =
       cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("warc_sink").toString
+        val out = graft.runtime.TempDirs.cacheDir("warc_sink").toString
         val isMeta = col("doc_id") % 9 === 0
         val metaJson = concat(lit("{\"k\":"), col("doc_id").cast("string"), lit("}"))
         docs(s, sfDir).select(
@@ -5621,7 +5621,7 @@ object PipelineQueries {
     private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def dir(s: SparkSession, sfDir: String): String =
       cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("link_warc").toString
+        val out = graft.runtime.TempDirs.cacheDir("link_warc").toString
         val did = col("doc_id")
         docs(s, sfDir).select(
             concat(lit("urn:link:"), did.cast("string")).as("record_id"),
@@ -6168,7 +6168,7 @@ object PipelineQueries {
     private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def dir(s: SparkSession, sfDir: String): String =
       cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("warc_revisit").toString
+        val out = graft.runtime.TempDirs.cacheDir("warc_revisit").toString
         val id = col("doc_id")
         val c = pmod(id, lit(40L))
         val isRev = id % 3 === 0 && id > 0
@@ -6269,7 +6269,7 @@ object PipelineQueries {
     private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def dir(s: SparkSession, sfDir: String): String =
       cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("warc_rvstream").toString
+        val out = graft.runtime.TempDirs.cacheDir("warc_rvstream").toString
         docs(s, sfDir).select(col("doc_id"))
           .repartition(2, pmod(col("doc_id"), lit(2L)))
           .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
@@ -6323,7 +6323,7 @@ object PipelineQueries {
     def textOf(id: Long): String = s"payload-$id-" + "x" * (id % 50).toInt
     def dir(s: SparkSession, sfDir: String): String =
       cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("warc_http").toString
+        val out = graft.runtime.TempDirs.cacheDir("warc_http").toString
         val rows = docs(s, sfDir).select(col("doc_id"))
           .repartition(4, pmod(col("doc_id"), lit(4L)))
         rows.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>

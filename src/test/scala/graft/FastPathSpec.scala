@@ -286,17 +286,21 @@ class FastPathSpec extends AnyFunSuite {
   }
 
   test("reference-shipped schemas round-trip through the engine") {
-    val dir = "/root/reference/nifi-datasynthesizer-processors/src/main/resources/generators"
+    // the reference's generator schemas, committed as test resources
+    // (two are reconstructions; each file's header says which)
+    def generator(name: String): String = {
+      val in = getClass.getResourceAsStream(s"/graft/generators/$name")
+      assert(in != null, s"test resource graft/generators/$name missing")
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
+    }
     for (name <- Seq("iot-data.json", "terminal.json", "transaction.json",
       "valid_transaction.json")) {
-      val schema = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/$name")), java.nio.charset.StandardCharsets.UTF_8)
-      val df = Synth.dataFrame(spark, schema, 5, seed = 1)
+      val df = Synth.dataFrame(spark, generator(name), 5, seed = 1)
       assert(df.count() >= 5, s"$name generated no rows")
     }
     // transaction.json amounts honor [0, 50000)
-    val tx = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      s"$dir/transaction.json")), java.nio.charset.StandardCharsets.UTF_8)
+    val tx = generator("transaction.json")
     Synth.dataFrame(spark, tx, 200, seed = 2).collect().foreach { r =>
       val amt = r.getAs[Long]("transaction_amount")
       assert(amt >= 0 && amt < 50000)
